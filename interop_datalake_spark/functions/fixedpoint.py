@@ -36,9 +36,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: the default fixed-point scale: 6 decimal places
-MICRO = 1000000
-
 
 def _idiv(a: Column, b: Column) -> Column:
     """Exact integral ``a div b`` (truncating; == floor for a >= 0)."""
@@ -75,13 +72,6 @@ def div_half_up(num: Column, den: Column) -> Column:
     return F.when(
         num >= 0, _idiv(2 * num + den, 2 * den)
     ).otherwise(-_idiv(-2 * num + den, 2 * den))
-
-
-def ratio_micros(num: Column, den: Column) -> Column:
-    """``round(num / den, 6)`` as exact BIGINT micro-units (HALF_UP).
-    DuckDB spelling: the :func:`div_half_up` idiom applied to
-    ``num * 1000000`` over ``den``."""
-    return div_half_up(num.cast("bigint") * F.lit(MICRO), den)
 
 
 def micros_to_double(c: Column) -> Column:

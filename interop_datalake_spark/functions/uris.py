@@ -1,4 +1,4 @@
-"""Path templating + object-URL functions, as column expressions.
+"""Path templating + object-URL functions, mostly as column expressions.
 
 Reference parity:
 - ``DatalakePublishService.kt:68-73``  FHIR partitioned path (R1)
@@ -10,7 +10,10 @@ Reference parity:
   ``https://objectstorage.<region>.oraclecloud.com/n/<ns>/b/<bucket>/o/<path>``
   and returns null for malformed URIs (``OCIClientTest.kt:244-254``).
 
-All pure string algebra — these stay in whole-stage codegen.
+All pure string algebra — these stay in whole-stage codegen. The
+raw-data path is a plain-string function, and the full URL also has a
+plain-string twin (``datalake_full_url_str``), for the raw publish,
+which holds its values on the driver.
 """
 
 from __future__ import annotations
@@ -56,15 +59,19 @@ def binary_file_path(tenant_id: Column | str, resource_id: Column | str) -> Colu
     )
 
 
-def raw_data_file_path(tenant_id: Column | str, transaction_id: Column | str) -> Column:
+#: fixed part of the object-URL template — shared by the Column builder
+#: and its plain-string twin so the two cannot drift
+_URL_BASE = "https://objectstorage.{region}.oraclecloud.com/n/{namespace}/b/{bucket}/o/"
+
+
+def raw_data_file_path(tenant_id: str | None, transaction_id: str | None) -> str | None:
     """``raw_data_response/tenant_id=<t>/transaction_id/<uuid>``
-    (``DatalakePublishService.kt:177``)."""
-    return F.concat(
-        F.lit("raw_data_response/tenant_id="),
-        _col(tenant_id),
-        F.lit("/transaction_id/"),
-        _col(transaction_id),
-    )
+    (``DatalakePublishService.kt:177``), over Python values: the raw
+    publish holds both on the driver. NULL in gives None, as ``concat``
+    does."""
+    if tenant_id is None or transaction_id is None:
+        return None
+    return f"raw_data_response/tenant_id={tenant_id}/transaction_id/{transaction_id}"
 
 
 def datalake_full_url(
@@ -76,11 +83,23 @@ def datalake_full_url(
     """Public object URL (``OCIClient.kt:94-95``; region default
     ``us-phoenix-1`` per ``OCIClient.kt:28-44``)."""
     return F.concat(
-        F.lit(
-            f"https://objectstorage.{region}.oraclecloud.com/n/{namespace}/b/{bucket}/o/"
-        ),
+        F.lit(_URL_BASE.format(region=region, namespace=namespace, bucket=bucket)),
         _col(file_path),
     )
+
+
+def datalake_full_url_str(
+    file_path: str | None,
+    region: str = "us-phoenix-1",
+    namespace: str = "namespace",
+    bucket: str = "datalake",
+) -> str | None:
+    """:func:`datalake_full_url` over a Python value: NULL in, None out,
+    like ``concat``."""
+    if file_path is None:
+        return None
+    base = _URL_BASE.format(region=region, namespace=namespace, bucket=bucket)
+    return base + file_path
 
 
 #: full-URL shape: /n/<namespace>/b/<bucket>/o/<path>

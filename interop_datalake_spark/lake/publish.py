@@ -39,7 +39,10 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from interop_datalake_spark.functions.uris import datalake_full_url, raw_data_file_path
+from interop_datalake_spark.functions.uris import (
+    datalake_full_url_str,
+    raw_data_file_path,
+)
 from interop_datalake_spark.lake.txn import TxnTable
 from interop_datalake_spark.session import DatalakeSession
 
@@ -164,7 +167,12 @@ def publish_binary(
         return 0
     if binaries.filter(~_id_present()).head(1):
         raise MissingResourceIdError("Binary resources must all carry an id")
-    stamped = binaries.withColumn("fhir_tenant_id", F.lit(tenant_id))
+    # the row count rides the write job (no extra count job), as in
+    # publish_fhir_r4
+    obs = Observation("publish_binary")
+    stamped = binaries.withColumn("fhir_tenant_id", F.lit(tenant_id)).observe(
+        obs, F.count(F.lit(1)).alias("rows")
+    )
     if session.acid:
         txn_table(session, BINARY_TABLE).append(stamped)
     else:
@@ -174,7 +182,7 @@ def publish_binary(
             .format(session.format)
             .save(session.table_path(BINARY_TABLE))
         )
-    return stamped.count()
+    return obs.get["rows"]
 
 
 def overwrite_tenant_partition(
@@ -216,23 +224,46 @@ def overwrite_tenant_partition(
     return stamped.count()
 
 
+_RAW_SCHEMA = (
+    "tenant_id STRING, transaction_id STRING, url STRING, time STRING, body STRING"
+)
+
+
+def _raw_frame(
+    spark, tenant_id: str, txn_id: str, url: str, data: str
+) -> DataFrame:
+    """The one-row ``RawDataWrapper`` frame ``publish_raw_data`` commits.
+    Built from pandas it is an Arrow-sized LocalRelation, so the ACID
+    commit takes the driver write; a Python list would be an RDD with
+    no size estimate and pay for the distributed writer."""
+    import pandas as pd
+
+    now_iso = datetime.now(timezone.utc).replace(tzinfo=None).isoformat()
+    row = {
+        "tenant_id": tenant_id,
+        "transaction_id": txn_id,
+        "url": url,
+        "time": now_iso,
+        "body": data,
+    }
+    return spark.createDataFrame(pd.DataFrame([row]), _RAW_SCHEMA)
+
+
 def publish_raw_data(
     session: DatalakeSession, tenant_id: str, data: str, url: str
-) -> str:
+) -> str | None:
     """Single-record raw-response sink; returns the object's full URL
     (``DatalakePublishService.kt:169-196``).
 
     Wraps ``(url, now-as-ISO-string, body)`` exactly like
     ``RawDataWrapper`` (:198) — the timestamp is stored as an ISO-8601
     *string* for reference fidelity — under a fresh transaction UUID
-    (:174).
+    (:174). The URL is formatted from the values in hand, so no Spark
+    job reads the row back; a NULL tenant gives None, as ``concat``
+    does.
     """
     txn_id = str(uuid.uuid4())
-    now_iso = datetime.now(timezone.utc).replace(tzinfo=None).isoformat()
-    row_df = session.spark.createDataFrame(
-        [(tenant_id, txn_id, url, now_iso, data)],
-        "tenant_id STRING, transaction_id STRING, url STRING, time STRING, body STRING",
-    )
+    row_df = _raw_frame(session.spark, tenant_id, txn_id, url, data)
     if session.acid:
         txn_table(session, RAW_TABLE).append(row_df)
     else:
@@ -242,10 +273,4 @@ def publish_raw_data(
             .format(session.format)
             .save(session.table_path(RAW_TABLE))
         )
-    path = row_df.select(
-        raw_data_file_path(F.col("tenant_id"), F.col("transaction_id")).alias("p")
-    ).first()["p"]
-    full_url = row_df.select(
-        datalake_full_url(F.lit(path)).alias("u")
-    ).first()["u"]
-    return full_url
+    return datalake_full_url_str(raw_data_file_path(tenant_id, txn_id))

@@ -172,21 +172,6 @@ def train_pq_residual_model(
     return books, anchor_rows
 
 
-def normalized_centroids(cents: DataFrame) -> DataFrame:
-    """(cell, _cnorm): the coarse centroids L2-normalized — the
-    empty-cell FALLBACK anchor (assignment is by cosine, so only the
-    direction is meaningful there)."""
-    x = F.col("_cent_vec").cast("array<double>")
-    nrm = F.sqrt(
-        F.aggregate(x, F.lit(0.0), lambda a, v: a + v * v)
-    )
-    safe = F.when(nrm == F.lit(0.0), F.lit(1.0)).otherwise(nrm)
-    return cents.select(
-        "cell",
-        F.transform(x, lambda v: v / safe).alias("_cnorm"),
-    )
-
-
 def _residual_subvectors(
     df: DataFrame,
     assigned: DataFrame,
